@@ -75,7 +75,7 @@ def shingle_hashes(text_col: str, k: int = 3, hash_fn: str = "md5") -> Column:
     hash_fn="md5" (default) is cross-engine reproducible — required
     wherever a DuckDB oracle recomputes the same hashes — but costs an
     md5 + hex-parse per gram. hash_fn="xxhash64" is the hot-path choice
-    (~10× cheaper, measured in scripts/scale_probe_pipeline.py):
+    (~10× cheaper, BASELINE.md's round-5 pipeline-tier probe):
     engine-local, so only valid when both join sides are hashed by THIS
     engine in the same job (true for any contamination/overlap scan)."""
     from .text import tokens

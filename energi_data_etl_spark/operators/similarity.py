@@ -567,7 +567,8 @@ def ann_ivf_knn(
     well above this floor at the same probed fraction; raise `nprobe`
     (linear cost in probed fraction) when a workload needs a guarantee
     on unstructured vectors. Published two-level operating point
-    (PROBES_r16, worst-case 1M i.i.d. vectors / K=1953): recall@5 0.81
+    (BASELINE.md round-16 probes, worst-case 1M i.i.d. vectors /
+    K=1953): recall@5 0.81
     at nprobe=384 and 0.88 at nprobe=512 (was 0.39 at np=64 before the
     r16 refined probe + fit-sample floor); corpus assignment cost
     unchanged (nearest=1 path untouched) — the recall is bought on the
@@ -1071,7 +1072,7 @@ def semdedup_prune(
     deliberately forgoes: that query pins K=32 centroids (first 32
     vec_ids) so a DuckDB oracle can mirror the centroid set exactly,
     which makes its pair stage N²/(2K) — quadratic at fixed K (measured:
-    scripts/scale_probe_r11.py). This operator is the production shape:
+    BASELINE.md, round-11 scale probe). This operator is the production shape:
 
     * **K scales with N** (``K = max(32, N // target_cell)``) so the
       expected cell size — and with it Σ n_c²/2 ≈ N·target_cell/2

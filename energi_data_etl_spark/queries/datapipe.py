@@ -729,7 +729,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushes below the repartition (heavy expression evaluated twice, the
     # filter copy single-threaded in the 1-task scan stage); with the
     # expression inline no filter is inferred and it runs once,
-    # post-shuffle (plans/r17/source_overlap_matrix_{before,after}.txt)
+    # post-shuffle (OPTIMIZATION_r17.md, source_overlap_matrix)
     d = load_table(spark, "documents", sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )

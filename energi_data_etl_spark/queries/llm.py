@@ -576,7 +576,7 @@ def ann_ivf_two_level_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nprobe=8 ⇒ 9 of 16 cells). At 100 TB this is the assignment shape
     that survives K ∝ N: probe at 1M vectors / K=1953 measured 3.44 s
     two-level vs 10.60 s single-level at EQUAL corpus recall
-    (PROBES_r14.json). Fixture recall (worst-case i.i.d. vectors,
+    (BASELINE.md round-14 probes). Fixture recall (worst-case i.i.d. vectors,
     measured 0.76/0.82/0.80 at sf0.001/0.01/0.1) gates at the 0.5
     corpus floor; the exact top-1 columns stay hash-certified against
     DuckDB, and the oracle pins n_ann=5 / corpus_recall_ok TRUE —

@@ -1103,7 +1103,8 @@ def bfs_reachability_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # recursion replays paths, not nodes: total rows ≈ Σ degree-products,
     # which passes Spark's 1M-row recursion guard around ~5M input rows
-    # (measured, scale_probe_r08c). Raise it and LEAVE it set — the
+    # (measured, BASELINE.md round-8 ops-analytics probe). Raise it and
+    # LEAVE it set — the
     # returned plan executes the recursion at collect time (lazy-plan
     # rule: never unset a conf the returned plan still needs).
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(50_000_000))
@@ -1837,7 +1838,7 @@ def shortest_path_layered_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed — bound the edge BUILD to those layers BEFORE the
     # localCheckpoint, not after (output-identical; without this the
     # checkpoint materializes |V|-sized edges of which a constant number
-    # is used — measured 4.9x at 5x nodes in scripts/scale_probe_r11.py,
+    # is used — measured 4.9x at 5x nodes in BASELINE.md's round-11 probe,
     # ~flat with the bound pushed into the scan).
     a = nation.select(F.col("n_nationkey").alias("a"), F.expr("n_nationkey div 5").alias("layer")).filter(
         F.col("layer") < 4

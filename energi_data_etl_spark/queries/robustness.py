@@ -76,7 +76,7 @@ def percentile_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregatable and spillable: the heaviest shuffle carries
     distinct (flag, value) pairs, the window sorts distinct values
     (not rows), and the picks are plain conditional MINs. 1M→5M probe:
-    see PROBES_r13.json. At 100 TB the sketch
+    see BASELINE.md's round-13 probes. At 100 TB the sketch
     (approx_percentile_sketch) remains the cheap path; this is the
     exact path that no longer needs a single-task buffer."""
     li = load_table(spark, "lineitem", sf_dir).select("l_returnflag", "l_extendedprice")

@@ -261,7 +261,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory-sink drain, not the operator). The unbounded-deploy shape —
     append mode, watermark-evicted state bounded at |open sessions| —
     is certified separately as streaming_session_windows_append (r13;
-    parquet-sink decomposition 1.39x at 5x events, PROBES_r13.json)."""
+    parquet-sink decomposition 1.39x at 5x events, BASELINE.md round-13 probes)."""
     stream = events_stream(spark, _events_path(sf_dir))
     drained = run_to_memory(session_window_stats(stream, gap="30 minutes"), output_mode="complete")
     return drained.select(

@@ -102,14 +102,17 @@ def with_retry(fn: Callable[[], object], num_retries: int = 3, sleep_s: float = 
     """The reference's retry-with-fixed-sleep (:61-78), as a reusable
     task-level wrapper: last error re-raised instead of swallowed (the
     reference prints and moves on; under Spark, raising lets the task
-    retry budget and the skip-empty guard do their jobs)."""
+    retry budget and the skip-empty guard do their jobs). Sleeps only
+    between attempts: a sleep after the last one would just delay the
+    raise."""
     last: Exception | None = None
-    for _ in range(num_retries):
+    for attempt in range(num_retries):
+        if attempt:
+            time.sleep(sleep_s)
         try:
             return fn()
         except Exception as exc:  # noqa: BLE001
             last = exc
-            time.sleep(sleep_s)
     assert last is not None
     raise last
 

@@ -5,7 +5,7 @@ must self-apply them), runs entry() at sf0.001, then every declared
 query at sf0.01 against its DuckDB oracle with the same canonicalization
 the driver uses. Exit code 1 on any mismatch.
 
-Usage: python scripts/driver_sim.py [sf_dir]
+Usage: python scripts/driver_sim.py [--queries=a,b] [sf_dir]
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ plus a one-line-per-query summary of anti-pattern signals:
   - scans whose PushedFilters is empty while a Filter sits above
     (guide §6 — pushdown)
 
-Usage: python scripts/plan_audit.py [--sf DIR] [--out plans/r17/audit]
+Usage: python scripts/plan_audit.py [--sf DIR] [--out plans/audit]
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
-    out_dir = os.path.join("plans", "r17", "audit")
+    out_dir = os.path.join("plans", "audit")
     if "--sf" in args:
         sf_dir = args[args.index("--sf") + 1]
     if "--out" in args:
@@ -37,7 +37,7 @@ def main() -> int:
     from energi_data_etl_spark.queries import QUERIES
     from energi_data_etl_spark.session import get_spark
 
-    spark = get_spark("plan-audit-r17")
+    spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
 

@@ -1,5 +1,5 @@
 """Parameterized scale-probe harness (VERDICT r11 item 8): the common
-machinery of the twelve scale_probe_r0*.py one-offs — full-shape
+machinery of the earlier per-round one-off probe scripts — full-shape
 synthetic table generation at two sizes, warm-then-min-of-2 timing, and
 a ratio JSON line — folded into ONE module, so a new probe is a CLI
 invocation, not a new file:
@@ -7,9 +7,8 @@ invocation, not a new file:
     python scripts/probe.py --queries feature_equidepth_bins_sketch,streaming_ohlc_candles_append
     python scripts/probe.py --queries semdedup_prune_scaled --small 1000000 --big 5000000
 
-The historical scale_probe_r0*.py scripts stay in scripts/ as the
-provenance of BASELINE.md's recorded ratios (docstrings cite them by
-name); new ratios should be produced here.
+The one-off scripts behind BASELINE.md's older ratios were removed;
+git history keeps them. New ratios are produced here.
 
 Generator notes (lessons already paid for):
 * events.ts is written as ns-LONGS — the fixture's on-disk form: the

@@ -129,6 +129,35 @@ def test_retry_exhausts_and_raises():
         with_retry(dead, num_retries=2, sleep_s=0.0)
 
 
+def test_retry_sleeps_only_between_attempts(monkeypatch):
+    from energi_data_etl_spark.sources import http_json
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(http_json.time, "sleep", sleeps.append)
+    errors = iter(ConnectionError(f"try {i}") for i in range(1, 4))
+
+    def dead():
+        raise next(errors)
+
+    # exhaustion: num_retries - 1 sleeps, then the LAST error is re-raised
+    with pytest.raises(ConnectionError, match="try 3"):
+        with_retry(dead, num_retries=3, sleep_s=5.0)
+    assert sleeps == [5.0, 5.0]
+
+    sleeps.clear()
+    outcomes = iter([ConnectionError("once"), "ok"])
+
+    def flaky():
+        out = next(outcomes)
+        if isinstance(out, Exception):
+            raise out
+        return out
+
+    # success on the 2nd try: one sleep
+    assert with_retry(flaky, num_retries=3, sleep_s=5.0) == "ok"
+    assert sleeps == [5.0]
+
+
 def test_write_fact_table_skips_empty(spark, tmp_path):
     empty = spark.createDataFrame([], "date date, zone string, avg_price double")
     assert not write_fact_table(empty, str(tmp_path / "t"))  # reference :82 guard
