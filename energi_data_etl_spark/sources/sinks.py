@@ -4,13 +4,16 @@ The reference loads a pandas frame into BigQuery with a declared
 schema, WRITE_APPEND, and a utcnow() audit column
 (scripts/energy_etl.py:86-111). The engine's durable store is
 date-partitioned Parquet: append mode gives the same incremental
-semantics, the partition column makes the watermark query (A2/T1) a
-metadata operation, and downstream date filters become partition
-pruning — the layout decision that matters most at 100 TB (SURVEY §4.3).
+semantics, the partition column lets the watermark query (A2/T1) be
+answered from the partition directory names — one driver-side listing
+of the table root, no Spark job — and downstream date filters become
+partition pruning — the layout decision that matters most at 100 TB
+(SURVEY §4.3).
 """
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
@@ -72,17 +75,58 @@ def write_bucketed_table(
 
 
 def latest_watermark(spark: SparkSession, path: str, col: str = "date"):
-    """MAX(partition column) — the reference's watermark query (:22-37).
-    On a partitioned table this reads ONLY partition metadata (partition
-    pruning gives an empty scan per partition), not the data files.
-    Returns None on empty/missing table (reference's cold-start fallback
-    path, :42-46)."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — table does not exist yet
+    """MAX(partition column) — the reference's watermark query (:22-37) —
+    read from the table's ``<col>=<value>`` directory names with one
+    driver-side Hadoop FileSystem listing (any scheme: file://, hdfs://,
+    s3a://), starting no Spark job. ``spark.read.parquet(path)
+    .agg(max(col))`` would list every partition with a task per directory
+    and then scan the files.
+
+    Values are compared as ISO dates. Hidden root entries (``_SUCCESS``,
+    ``_temporary/``, ``.spark-staging-*``), ``<col>=__HIVE_DEFAULT_PARTITION__``
+    (NULL, which MAX skips) and directories that hold no visible data file
+    are skipped, as Spark's file index skips them.
+
+    Returns None only when the table does not exist or holds no data (the
+    reference's cold-start fallback, :42-46). Anything else raises,
+    because a failed read taken for a cold start would re-append the
+    lookback window as duplicate rows: a file path raises
+    NotADirectoryError; a value that is not an ISO date, or a visible root
+    entry other than a ``<col>=`` directory, raises ValueError; listing
+    errors propagate."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
         return None
-    row = df.agg(F.max(col).alias("wm")).first()
-    return row["wm"] if row else None
+    if not fs.getFileStatus(root).isDirectory():
+        raise NotADirectoryError(f"fact table path is a file, not a table directory: {path}")
+    prefix = f"{col}="
+    days = {}
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if name.startswith(prefix):
+            if name != prefix + "__HIVE_DEFAULT_PARTITION__":
+                days[datetime.date.fromisoformat(name[len(prefix):])] = status
+        elif not name.startswith(("_", ".")):
+            raise ValueError(f"{path} is not a table partitioned by {col}: its root holds {name}")
+    for day in sorted(days, reverse=True):
+        if _holds_data(fs, days[day]):
+            return day
+    return None
+
+
+def _holds_data(fs, status) -> bool:
+    """True iff the directory ``status`` holds a visible data file, directly
+    or under visible subdirectories (nested partitions). Visible means the
+    name starts with neither ``_`` nor ``.``, Spark's file-index rule."""
+    if not status.isDirectory():
+        return False
+    for child in fs.listStatus(status.getPath()):
+        if child.getPath().getName().startswith(("_", ".")):
+            continue
+        if not child.isDirectory() or _holds_data(fs, child):
+            return True
+    return False
 
 
 def align_to_table_schema(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:

@@ -163,6 +163,75 @@ def test_write_fact_table_skips_empty(spark, tmp_path):
     assert not write_fact_table(empty, str(tmp_path / "t"))  # reference :82 guard
 
 
+def test_watermark_reads_partition_names_without_jobs(spark, tmp_path):
+    """The watermark equals Spark's MAX(date) over the table, and it is
+    read from the partition directory names: no Spark job runs."""
+    table = str(tmp_path / "fact")
+    schema = "date date, zone string, avg_price double"
+    for days in (range(1, 12), range(12, 15)):
+        rows = [(datetime.date(2024, 1, d), z, float(d)) for d in days for z in ("SE1", "SE2")]
+        assert write_fact_table(spark.createDataFrame(rows, schema), table)
+    want = spark.read.parquet(table).agg(F.max("date")).first()[0]
+    assert want == datetime.date(2024, 1, 14)
+
+    sc = spark.sparkContext
+    group = "watermark_without_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = latest_watermark(spark, table, "date")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_watermark_ignores_hidden_staging_and_empty_partitions(spark, tmp_path):
+    """Only a `date=` directory holding a visible data file counts, as in
+    Spark's file index; missing and data-less tables are cold starts."""
+    root = tmp_path / "fact"
+    assert latest_watermark(spark, str(root)) is None  # no table yet
+
+    def touch(rel: str) -> None:
+        p = root / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_bytes(b"x")
+
+    touch("_SUCCESS")
+    assert latest_watermark(spark, str(root)) is None
+    touch("date=2024-01-05/part-00000.parquet")
+    touch("date=2024-01-10/part-00000.parquet")
+    touch("_temporary/0/date=2024-03-01/part-00000.parquet")
+    touch(".spark-staging-0f1e/date=2024-03-02/part-00000.parquet")
+    touch("date=2024-03-03/.part-00000.parquet.crc")
+    touch("date=2024-03-04/_SUCCESS")
+    touch("date=__HIVE_DEFAULT_PARTITION__/part-00000.parquet")
+    assert latest_watermark(spark, str(root)) == datetime.date(2024, 1, 10)
+    # a nested partition directory holds data too
+    touch("date=2024-01-12/zone=SE1/part-00000.parquet")
+    assert latest_watermark(spark, str(root)) == datetime.date(2024, 1, 12)
+
+
+def test_watermark_failures_are_not_cold_starts(spark, tmp_path):
+    """A read failure taken for a cold start re-appends the lookback window
+    as duplicates: only a missing table is a cold start."""
+    plain = tmp_path / "fact"
+    plain.write_text("not a table")
+    with pytest.raises(NotADirectoryError):
+        latest_watermark(spark, str(plain))
+
+    bad = tmp_path / "bad"
+    (bad / "date=yesterday").mkdir(parents=True)
+    (bad / "date=yesterday" / "part-00000.parquet").write_bytes(b"x")
+    with pytest.raises(ValueError, match="yesterday"):
+        latest_watermark(spark, str(bad))
+
+    by_zone = tmp_path / "by_zone"  # partitioned by (zone, date), not date first
+    (by_zone / "zone=SE1" / "date=2024-01-01").mkdir(parents=True)
+    (by_zone / "zone=SE1" / "date=2024-01-01" / "part-00000.parquet").write_bytes(b"x")
+    with pytest.raises(ValueError, match="not a table partitioned by date"):
+        latest_watermark(spark, str(by_zone))
+
+
 def test_partition_pruning_on_fact_table(spark, tmp_path):
     """The layout contract: date filters on the partitioned fact table
     must prune partitions (PartitionFilters), not scan them."""
