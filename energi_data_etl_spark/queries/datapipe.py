@@ -847,8 +847,8 @@ def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.size(toks)
     # r18 opt (VERDICT r17 #8): filtering on the COMPUTED n pushed the
     # predicate below the projection, so the tokenize ran twice per row
-    # (Filter condition + Project — plans/r18/doc_chunk_sliding_before
-    # node (2)). Pre-filter on the raw text instead: n > 0 ⟺ the text
+    # (Filter condition + Project — node (2) of the r18 before-plan,
+    # plans/r18/doc_chunk_sliding_before.txt in git history). Pre-filter on the raw text instead: n > 0 ⟺ the text
     # has any non-space character (tokens split on the literal single
     # space; NULL/empty text drops on both forms), so the pushed filter
     # is a cheap string scan and the tokenize runs ONCE, in the

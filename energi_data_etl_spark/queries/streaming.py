@@ -30,128 +30,39 @@ def _events_path(sf_dir: str) -> str:
     return f"{sf_dir}/events.parquet"
 
 
-def _chunked_file_stream(
-    spark: SparkSession, parts: list[DataFrame], base: str, cache_key: str | None = None
-):
+def _chunked_file_stream(spark: SparkSession, parts: list[DataFrame], base: str):
     """Replay a partitioned bounded frame as a file stream: each part
-    becomes one single-file chunk opened with maxFilesPerTrigger=1 —
-    one part per micro-batch. Spark's FileStreamSource orders files by
-    MODIFICATION TIME ONLY (filenames are not a tiebreak), so each
-    chunk's mtime is stamped explicitly, strictly increasing in list
-    order — sequential write order alone could tie on a coarse-mtime
-    filesystem and silently reorder the replay (ADVICE r14). The
-    ordering contract every replay harness below relies on lives here
-    and nowhere else.
-
-    ``cache_key`` (r16): when the chunk CONTENT is a pure function of
-    the key — a deterministic projection/split of an immutable fixture
-    table — the chunks are published once to a deterministic directory
-    (atomic rename, the `_shared_events_src` recipe) and every later
-    query/run streams from it instead of re-writing ~1 s of coalesced
-    parquet per drain (the r15 write-replay-chunks-ONCE lesson; the
-    suppressor pair shares one key, so the second drain pays zero
-    setup). Checkpoints stay per-query — sharing SOURCE files across
-    streaming queries is always safe."""
+    becomes one single-file chunk under ``{base}/src``, opened with
+    maxFilesPerTrigger=1 — one part per micro-batch. Spark's
+    FileStreamSource orders files by MODIFICATION TIME ONLY (filenames
+    are not a tiebreak), so each chunk's mtime is stamped explicitly,
+    strictly increasing in list order — sequential write order alone
+    could tie on a coarse-mtime filesystem and silently reorder the
+    replay (ADVICE r14). The ordering contract every replay harness
+    below relies on lives here and nowhere else. The queries pass their
+    own ``scratch_dir`` as ``base``, so the chunks go with the process."""
     import glob
     import os
     import shutil
 
-    def build(src: str) -> None:
-        os.makedirs(src)
-        for i, part in enumerate(parts):
-            tmp_i = f"{src}.__part{i}"
-            part.coalesce(1).write.parquet(tmp_i)
-            dst = f"{src}/{i:02d}.parquet"
-            shutil.move(glob.glob(f"{tmp_i}/part-*.parquet")[0], dst)
-            shutil.rmtree(tmp_i, ignore_errors=True)
-            t = 1_700_000_000 + i  # strictly increasing, 1 s apart
-            os.utime(dst, (t, t))
-
-    if cache_key is None:
-        src = f"{base}/src"
-        build(src)
-    else:
-        # fold the projection into the hashed key so a changed column
-        # list can never silently serve a stale cache (ADVICE r16);
-        # callers fold the source-content fingerprint + chunking params
-        # in via fixture_fingerprint and their key tag.
-        src = _resolved_cache_path(cache_key, parts[0].schema)
-        if not os.path.isdir(src):
-            # stage NEXT TO the final path (same filesystem — a rename
-            # from the per-run temp scratch into ~/.cache could EXDEV)
-            stage = f"{src}.__stage_{os.getpid()}"
-            shutil.rmtree(stage, ignore_errors=True)
-            build(stage)  # mtimes survive the rename
-            try:
-                os.rename(stage, src)
-            except OSError:
-                # another run won the publish — but only trust that if
-                # the winner's directory actually exists; otherwise the
-                # rename failed for a real reason (permissions, EXDEV)
-                # and this run streams its own complete stage dir
-                # (ADVICE r16).
-                if os.path.isdir(src):
-                    shutil.rmtree(stage, ignore_errors=True)
-                else:
-                    src = stage
+    src = f"{base}/src"
+    os.makedirs(src)
+    for i, part in enumerate(parts):
+        tmp_i = f"{src}.__part{i}"
+        part.coalesce(1).write.parquet(tmp_i)
+        dst = f"{src}/{i:02d}.parquet"
+        shutil.move(glob.glob(f"{tmp_i}/part-*.parquet")[0], dst)
+        shutil.rmtree(tmp_i, ignore_errors=True)
+        t = 1_700_000_000 + i  # strictly increasing, 1 s apart
+        os.utime(dst, (t, t))
     return spark.readStream.schema(parts[0].schema).option("maxFilesPerTrigger", 1).parquet(src)
 
 
-def fixture_fingerprint(sf_dir: str, table: str) -> str:
-    """abspath + mtime_ns + size of a fixture parquet — folded into
-    replay-cache keys so a REGENERATED fixture at the same path can
-    never silently serve stale chunks (ADVICE r16)."""
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    try:
-        st = os.stat(p)
-        return f"{p}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return p
-
-
-def _resolved_cache_path(cache_key: str, schema) -> str:
-    """The full replay-cache path for a (caller key, projection) pair —
-    the schema suffix keeps the hit-check in _id_chunked_stream and the
-    build in _chunked_file_stream on one key."""
-    return _replay_cache_path(f"{cache_key}|schema={schema.simpleString()}")
-
-
-def _replay_cache_path(cache_key: str) -> str:
-    """Deterministic cache dir under a USER-OWNED root (not the
-    world-writable temp dir, where another user could squat the name —
-    ADVICE r16). Override with SPARK_GRAFT_CACHE_DIR."""
-    import hashlib
-    import os
-
-    key = hashlib.md5(cache_key.encode()).hexdigest()[:12]
-    return os.path.join(_cache_root(), f"replay_{key}")
-
-
-def _cache_root() -> str:
-    import os
-
-    root = os.environ.get("SPARK_GRAFT_CACHE_DIR") or os.path.join(
-        os.path.expanduser("~"), ".cache", "energi_data_etl_spark"
-    )
-    os.makedirs(root, exist_ok=True)
-    return root
-
-
-def _id_chunked_stream(
-    spark: SparkSession, df: DataFrame, base: str, n_chunks: int = 3, cache_key: str | None = None
-):
+def _id_chunked_stream(spark: SparkSession, df: DataFrame, base: str, n_chunks: int = 3):
     """Id-ordered replay: split on doc_id ranges so ids arrive
     non-decreasing across micro-batches — the certification harness for
     arrival-ordered streaming semantics (neardup suppression,
     blocklist guards)."""
-    import os
-
-    if cache_key is not None and os.path.isdir(_resolved_cache_path(cache_key, df.schema)):
-        # cache hit: skip the bounds collect entirely (2 Spark jobs) —
-        # filters don't change the schema, so stream straight off it
-        return _chunked_file_stream(spark, [df], base, cache_key=cache_key)
     bounds = df.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]  # bounded driver scalars
     mn, mx = int(bounds[0]), int(bounds[1])
     step = (mx - mn + n_chunks) // n_chunks  # ceil of the id span
@@ -159,10 +70,17 @@ def _id_chunked_stream(
         df.filter((F.col("doc_id") >= mn + i * step) & (F.col("doc_id") < mn + (i + 1) * step))
         for i in range(n_chunks)
     ]
-    return _chunked_file_stream(spark, parts, base, cache_key=cache_key)
+    return _chunked_file_stream(spark, parts, base)
 
 
-def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str, cache_key: str | None = None):
+def _mod3_parts(ev: DataFrame) -> list[DataFrame]:
+    """The ``event_id mod 3`` split that streaming_foreachbatch_upsert
+    and streaming_update_mode_totals each drain, one part per
+    micro-batch."""
+    return [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)]
+
+
+def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str):
     """Time-ordered replay of an events-shaped frame (has a ``ts``
     timestamp): three ~10-day January chunks, one micro-batch each
     (the fixture spans Jan 1-30 at every SF)."""
@@ -170,7 +88,7 @@ def _day_chunked_stream(spark: SparkSession, ev: DataFrame, base: str, cache_key
         ev.filter((F.dayofmonth("ts") >= lo) & (F.dayofmonth("ts") <= hi))
         for lo, hi in [(1, 10), (11, 20), (21, 31)]
     ]
-    return _chunked_file_stream(spark, parts, base, cache_key=cache_key)
+    return _chunked_file_stream(spark, parts, base)
 
 
 @query(
@@ -631,17 +549,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
 
     base = scratch_dir("febatch_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    # r18 opt: same deterministic pmod-3 split streaming_update_mode_
-    # totals drains — one shared replay-cache publish serves both (and
-    # this builder previously relied on move-order mtimes, which a
-    # coarse-mtime filesystem could tie and reorder; the shared builder
-    # stamps strictly-increasing mtimes explicitly, ADVICE r14).
-    stream = _chunked_file_stream(
-        spark,
-        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
-        base,
-        cache_key=f"mod3ev:{fixture_fingerprint(sf_dir, 'events')}",
-    )
+    stream = _chunked_file_stream(spark, _mod3_parts(ev), base)
 
     from ..streaming.ops import foreachbatch_merge_sink
 
@@ -748,15 +656,9 @@ def _neardup_suppress_run(spark: SparkSession, sf_dir: str, state_cap: int | Non
     from ..sources.tables import load_table
     from ..streaming.ops import neardup_suppress_stream
 
-    import os
-
     base = scratch_dir("nds_")
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    # pure projection+split of the immutable fixture: published once,
-    # shared by the capped/uncapped pair AND across runs
-    stream = _id_chunked_stream(
-        spark, docs, base, n_chunks=3, cache_key=f"id3docs:{fixture_fingerprint(sf_dir, 'documents')}"
-    )
+    stream = _id_chunked_stream(spark, docs, base, n_chunks=3)
     # one file per micro-batch = ONE scan task: repartition before the
     # md5+fold signature stage (the r07 single-row-group lesson, in
     # stream form) so the per-batch kernel runs at drain parallelism.
@@ -923,15 +825,7 @@ def streaming_blocklist_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(bag_fingerprint("text").alias("fp"))
         .distinct()
     )
-    import os
-
-    stream = _id_chunked_stream(
-        spark,
-        docs.filter(F.col("doc_id") >= 25),
-        base,
-        n_chunks=3,
-        cache_key=f"id3docs_ge25:{fixture_fingerprint(sf_dir, 'documents')}",
-    )
+    stream = _id_chunked_stream(spark, docs.filter(F.col("doc_id") >= 25), base, n_chunks=3)
     admitted = (
         stream.select("doc_id", bag_fingerprint("text").alias("fp"))
         .join(F.broadcast(blocklist), "fp", "left_anti")
@@ -997,11 +891,7 @@ def streaming_timeout_finalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.col("ts").cast("timestamp").alias("ts"), "value")
         .withColumn("week", ((F.dayofmonth("ts") - 1) / 7).cast("long"))
     )
-    import os
-
-    stream = _day_chunked_stream(
-        spark, ev, base, cache_key=f"day3evweek:{fixture_fingerprint(sf_dir, 'events')}"
-    )
+    stream = _day_chunked_stream(spark, ev, base)
     finalized = timeout_finalized_totals(
         stream, keys=["event_type", "week"], gap_ms=5 * 86400 * 1000, watermark="1 day"
     )
@@ -1080,11 +970,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") / 10).cast("long").alias("bkt"),
         )
     )
-    import os
-
-    stream = _day_chunked_stream(
-        spark, ev, base, cache_key=f"day3evbkt:{fixture_fingerprint(sf_dir, 'events')}"
-    )
+    stream = _day_chunked_stream(spark, ev, base)
     summaries = heavy_hitters_stream(stream, key="event_type", item_col="bkt", k=K)
 
     sink = f"{base}/summ"
@@ -1219,18 +1105,8 @@ def streaming_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     late_replay = ev.filter(F.to_date("ts") <= "2024-01-05")
     tail = ev.filter(F.to_date("ts") >= "2024-01-26")
 
-    # r18 opt: the three chunks are a pure deterministic split+replay of
-    # the immutable fixture — publish them once through the shared
-    # replay cache instead of re-writing ~3 coalesced parquet files per
-    # run (the r16 write-chunks-ONCE recipe; same one-file-per-batch +
-    # strictly-increasing-mtime contract the hand-rolled builder had).
     stream = (
-        _chunked_file_stream(
-            spark,
-            [early, middle, late_replay.unionByName(tail)],
-            base,
-            cache_key=f"late3ev:{fixture_fingerprint(sf_dir, 'events')}",
-        )
+        _chunked_file_stream(spark, [early, middle, late_replay.unionByName(tail)], base)
         .withColumn("ts", F.col("ts").cast("timestamp"))  # watermark needs TimestampType, not NTZ
         .withWatermark("ts", "0 seconds")
     )
@@ -1270,16 +1146,7 @@ def streaming_update_mode_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = scratch_dir("updmode_")
     ev = load_table(spark, "events", sf_dir).select("event_id", "event_type", "value")
-    # r18 opt: deterministic pmod-3 split of the immutable fixture —
-    # published once via the shared replay cache (r16 recipe) instead of
-    # re-writing three coalesced files per run. The key is shared with
-    # streaming_foreachbatch_upsert, which drains the identical split.
-    stream = _chunked_file_stream(
-        spark,
-        [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)],
-        base,
-        cache_key=f"mod3ev:{fixture_fingerprint(sf_dir, 'events')}",
-    )
+    stream = _chunked_file_stream(spark, _mod3_parts(ev), base)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value")
     )

@@ -66,8 +66,6 @@ def load_dotenv(path: str = ".env", override: bool = False) -> dict[str, str]:
 
 @dataclass(frozen=True)
 class ApiConfig:
-    url_template: str = DEFAULT_URL_TEMPLATE
-    zones: Sequence[str] = DEFAULT_ZONES
     num_retries: int = 3  # reference :61
     retry_sleep_s: float = 5.0  # reference :78
     #: bearer token (reference reads API_TOKEN from env, energy_etl.py:13 —

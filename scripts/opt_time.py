@@ -1,11 +1,11 @@
 """Optimization inner loop: isolate queries, time them warm through
 the noop sink (guide §1.4), and dump `.explain("formatted")` to
-plans/<round>/<name>_<tag>.txt (the judge's plan evidence; round
-defaults to r18, override with --plans-dir).
+plans/opt/<name>_<tag>.txt (before/after plan evidence for a rewrite;
+override the directory with --plans-dir).
 
 Usage:
     python scripts/opt_time.py NAME [NAME ...] [--n 3] [--tag before]
-        [--sf /root/testdata/sf0.1] [--no-plan] [--plans-dir plans/r18]
+        [--sf /root/testdata/sf0.1] [--no-plan] [--plans-dir plans/opt]
 
 Prints per-query min of N warm runs — all N runs are recorded and the
 reported basis is the MIN (no first-run discard; the session-level
@@ -60,7 +60,7 @@ def main() -> int:
         mat(QUERIES[w].fn(spark, warm_dir))
 
     plans_dir = plans_override or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "..", "plans", "r18"
+        os.path.dirname(os.path.abspath(__file__)), "..", "plans", "opt"
     )
     os.makedirs(plans_dir, exist_ok=True)
 

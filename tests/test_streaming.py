@@ -946,3 +946,21 @@ def test_heavy_hitters_verdicts_and_exactness(spark, sf_dir):
         assert r["guarantee_ok"] and r["overcount_ok"], r
         assert r["n_candidates"] == 8, r
         assert r["top1_n"] > r["n_events"] / 8, r
+
+
+def test_drains_leave_nothing_outside_their_scratch_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """A replay drain stages its chunks in its own scratch dir: nothing
+    lands under the home directory or a cache root, so no run reads
+    what an earlier run left behind."""
+    from energi_data_etl_spark.queries.lifecycle import api_sink_stream_roundtrip
+    from energi_data_etl_spark.queries.streaming import streaming_update_mode_totals
+
+    home, cache = tmp_path / "home", tmp_path / "cache"
+    home.mkdir()
+    cache.mkdir()
+    monkeypatch.setenv("HOME", str(home))
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(cache))
+    for fn in (streaming_update_mode_totals, api_sink_stream_roundtrip):
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    assert list(home.rglob("*")) == []
+    assert list(cache.rglob("*")) == []
